@@ -15,6 +15,9 @@ The Spark engine's equivalent::
 packaged byte fixtures so a bare ``pipeline --warehouse w/`` works out
 of the box; ``--spec`` loads a cfg.yaml-shaped file when PyYAML is
 available (plans/spec.py:from_yaml), else the built-in DEFAULT_SPEC.
+``--table-format`` picks the component-table layout: ``parquet``
+(default, swap-in-place) or ``occ`` (transactional manifest tables,
+plans/snapshots.py).
 """
 
 from __future__ import annotations
@@ -42,18 +45,18 @@ def _build_parser() -> argparse.ArgumentParser:
     pl.add_argument("--group", default="current_cycle", help="fetch group (cfg.yaml:1-8)")
     pl.add_argument(
         "--table-format",
-        choices=("parquet", "snapshot", "manifest", "occ"),
+        choices=("parquet", "occ"),
         default="parquet",
-        help="component table layout: plain parquet swap (default), "
-        "pointer-flip snapshots, O(delta) incremental manifests, or "
-        "occ (manifests with concurrent-writer CAS commits)",
+        help="component table layout: plain parquet swap (default) or "
+        "occ (transactional O(delta) manifest tables with "
+        "concurrent-writer CAS commits)",
     )
     pl.add_argument(
         "--compact-target-mb",
         type=int,
         default=None,
         help="post-compress small-files maintenance: rewrite each "
-        "component to ~N MB files (manifest tables: checkpoint+vacuum)",
+        "component to ~N MB files (occ tables: checkpoint+vacuum)",
     )
     pl.add_argument(
         "--zorder-by",

@@ -54,6 +54,20 @@ def multi_source_union(
     return reduce(DataFrame.unionByName, parts).distinct()
 
 
+def insert_ignore_delta(existing: DataFrame, new: DataFrame) -> DataFrame:
+    """The rows an op-insert-ignore merge adds: ``distinct(new) ∖
+    existing`` as one full-row left-anti join, in ``existing``'s column
+    order. The match is null-safe (``<=>``), so NULL attribute combos
+    merge once. Incremental table merges write exactly this frame
+    (plans/snapshots.py:merge_insert_ignore_occ)."""
+    cols = existing.columns
+    e, n = existing.alias("e"), new.select(*cols).distinct().alias("n")
+    cond = reduce(
+        lambda a, b: a & b, [F.col(f"n.{c}").eqNullSafe(F.col(f"e.{c}")) for c in cols]
+    )
+    return n.join(e, on=cond, how="left_anti")
+
+
 def insert_ignore(existing: DataFrame, new: DataFrame) -> DataFrame:
     """op-insert-ignore: idempotent insert-if-absent merge.
 
@@ -67,13 +81,7 @@ def insert_ignore(existing: DataFrame, new: DataFrame) -> DataFrame:
     as pairwise distinct so reruns re-insert NULL-bearing rows — that
     quirk breaks idempotency, the property this operator exists for.)
     """
-    cols = existing.columns
-    e, n = existing.alias("e"), new.select(*cols).distinct().alias("n")
-    cond = reduce(
-        lambda a, b: a & b, [F.col(f"n.{c}").eqNullSafe(F.col(f"e.{c}")) for c in cols]
-    )
-    additions = n.join(e, on=cond, how="left_anti")
-    return existing.unionByName(additions)
+    return existing.unionByName(insert_ignore_delta(existing, new))
 
 
 def exact_dedup_keep_first(

@@ -15,21 +15,23 @@ FetchVersions → Sync → SqlLoad → Compress) with Spark stages:
   staging db; README.md:1 "prepping for postgres" maps to an optional
   JDBC sink, :func:`k8e_fetch_spark.plans.pipeline.write_jdbc`).
 - **Compress** (op-catalog-introspect/op-table-regex-match/op-distinct/
-  op-insert-ignore/op-multi-source-union/op-schema-clone): per
-  compressor, regex-match loaded tables, project each through the
-  component's subst (SourceColumns, fetcher.bash:163-169), and
-  idempotently merge into shared dimension tables
-  (CREATE…LIMIT 0 / UNIQUE INDEX / INSERT OR IGNORE ≙ schema_clone /
-  full-row distinct / left-anti append — fetcher.bash:156-160).
+  op-insert-ignore/op-multi-source-union): per compressor, regex-match
+  loaded tables, project each through the component's subst
+  (SourceColumns, fetcher.bash:163-169), union the projections into one
+  batch per component, and idempotently merge that batch ONCE into the
+  shared dimension table (UNIQUE INDEX / INSERT OR IGNORE ≙ full-row
+  distinct / null-safe left-anti append — fetcher.bash:156-160) —
+  a parquet swap, or an atomic OCC manifest commit
+  (plans/snapshots.py) with ``table_format="occ"``.
 
 Stage memoization: ``skip={"versions","sync","load","compress"}`` ≙ the
 FETCHER_SKIP_* flags (fetcher.bash:30,42,67,125).
 
 Scale notes: every stage is a DataFrame plan — no driver-side loops over
 rows. The per-component merge is one shuffle on the component's full
-column tuple; AQE broadcasts the existing side while it is small. At
-cluster scale the parquet-swap write becomes a Delta/Iceberg MERGE;
-the flow shape is identical.
+column tuple; AQE broadcasts the existing side while it is small. The
+occ format writes only the merge's delta (O(delta), not O(table)); at
+cluster scale it is the same protocol as a Delta/Iceberg MERGE.
 """
 
 from __future__ import annotations
@@ -41,47 +43,41 @@ from collections.abc import Iterable, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from k8e_fetch_spark.operators.dedup import insert_ignore
 from k8e_fetch_spark.operators.projection import project
+from k8e_fetch_spark.plans import snapshots as snap
 from k8e_fetch_spark.plans.spec import Compressor, PipelineSpec
 from k8e_fetch_spark.sources import ingest, manifest as mf
 
 
 class Pipeline:
-    """``table_format`` selects the component-table storage layout
-    (VERDICT r12 #4 — the maintenance machinery reachable from the
-    front door, not only as declared queries):
+    """``table_format`` selects the component-table storage layout:
 
     - ``"parquet"`` (default): plain dir-per-component with the
-      temp-write + atomic swap of :meth:`_sink` — the original flow,
-      byte-identical plans.
-    - ``"snapshot"``: pointer-flip snapshot tables
-      (plans/snapshots.py:merge_insert_ignore) — atomic merges, cheap
-      time travel, O(table) write per merge.
-    - ``"manifest"``: incremental manifest tables
-      (merge_insert_ignore_incremental) — O(delta) write per merge,
-      the 100 TB accretion shape.
-    - ``"occ"`` (r13): manifest tables with the CONCURRENT-WRITER
-      commit protocol (merge_insert_ignore_occ — version-claim CAS,
-      lost races recompute-and-retry). Same O(delta) writes; pick it
-      when more than one pipeline run can target the warehouse.
+      temp-write + atomic swap of :meth:`_sink`.
+    - ``"occ"``: transactional manifest tables
+      (plans/snapshots.py:merge_insert_ignore_occ) — O(delta) write per
+      merge, crash-safe commits, time travel, and a concurrent-writer
+      commit protocol (version-claim CAS, lost races recompute and
+      retry). Pick it when more than one pipeline run can target the
+      warehouse, or when merges must be atomic.
+
+    Either way :meth:`compress` merges each component ONCE per call:
+    the union of its per-source projections, deduplicated and
+    anti-joined against the existing table in one plan.
 
     ``compact_target_mb`` (optional) runs post-compress small-files
     maintenance on every component: parquet dirs are rewritten to
     ~target-sized files (operators/scale.py:compact_small_files, then
-    atomically swapped in); manifest tables are checkpointed into a
-    single compacted base sized by the same target
-    (plans/snapshots.py:checkpoint). Snapshot tables skip it: every
-    merge already rewrites the full table in one pass, so there is no
-    small-file accretion to repair.
+    atomically swapped in); occ tables are checkpointed into a single
+    compacted base sized by the same target (plans/snapshots.py:
+    checkpoint) and vacuumed under the default retention window.
 
-    ``zorder_by`` (optional, r14 — VERDICT r13 #7) lays each component
-    out in Z-order on 2-3 columns as the same post-compress pass —
-    Delta's ``OPTIMIZE ... ZORDER BY`` from the pipeline front door.
-    Works on every format (parquet rewrite+swap; snapshot pointer
-    flip; manifest/occ checkpoint) and on string keys
+    ``zorder_by`` (optional) lays each component out in Z-order on 2-3
+    columns as the same post-compress pass — Delta's ``OPTIMIZE ...
+    ZORDER BY`` from the pipeline front door. Works on both formats
+    (parquet rewrite+swap; occ checkpoint) and on string keys
     (operators/scale.py:write_zordered_auto — sampled range-id
     bucketing). Components missing a named column keep their plain
     layout. Composes with ``compact_target_mb``: one rewrite does
@@ -98,10 +94,8 @@ class Pipeline:
         zorder_by: Sequence[str] | None = None,
         cas=None,
     ):
-        if table_format not in ("parquet", "snapshot", "manifest", "occ"):
-            raise ValueError(
-                f"table_format must be parquet|snapshot|manifest|occ, got {table_format!r}"
-            )
+        if table_format not in ("parquet", "occ"):
+            raise ValueError(f"table_format must be parquet|occ, got {table_format!r}")
         if zorder_by is not None and len(zorder_by) not in (2, 3):
             raise ValueError(
                 f"zorder_by takes 2 or 3 columns, got {list(zorder_by)!r}"
@@ -176,38 +170,12 @@ class Pipeline:
         return [n for n in sorted(names) if any(re.search(p, n) for p in comp.table_include)]
 
     def compress(self, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        if self.table_format != "parquet":
-            return self._compress_into_tables(tables)
-        components: dict[str, DataFrame] = {}
-        for comp in self.spec.compressors:
-            matched = self.matched_tables(comp, tables)
-            for binding in comp.bindings:
-                columns = self.spec.components[binding.component]
-                for tname in matched:  # one INSERT OR IGNORE per source table
-                    src = project(tables[tname], columns, dict(binding.subst)).distinct()
-                    existing = components.get(binding.component)
-                    if existing is None:
-                        # CREATE TABLE IF NOT EXISTS … LIMIT 0 + first insert
-                        existing = self._read_component(binding.component, src)
-                    components[binding.component] = insert_ignore(existing, src)
-        # persist: the merge result replaces the component table
-        for name, df in components.items():
-            components[name] = self._sink(df, name)
-        self._maybe_compact(components)
-        return components
-
-    def _compress_into_tables(self, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        """Compress stage, snapshot/manifest form: the component's
-        existing state lives in its table directory, so build each
-        component's BATCH (union of the per-source projections — both
-        merge forms dedup the batch and anti-join it against the
-        current state internally) and run exactly ONE atomic merge per
-        component. Same final content as the chained per-source
-        ``insert_ignore`` of the parquet flow (set semantics), with the
-        table format's guarantees: crash-safe pointer flips, rerun
-        idempotency, and — in manifest form — O(delta) write volume."""
-        from k8e_fetch_spark.plans import snapshots as snap
-
+        """Build each component's batch — the union of its per-source
+        projections (op-multi-source-union) — then merge it ONCE: the
+        reference's per-source INSERT OR IGNORE runs compose into one
+        distinct + null-safe anti-join against the existing table (same
+        set semantics, one shuffle per component instead of one per
+        source)."""
         batches: dict[str, DataFrame] = {}
         for comp in self.spec.compressors:
             matched = self.matched_tables(comp, tables)
@@ -221,30 +189,26 @@ class Pipeline:
                     )
         components: dict[str, DataFrame] = {}
         for name, batch in batches.items():
-            tdir = self._component_path(name)
-            if self.table_format == "snapshot":
-                snap.merge_insert_ignore(self.spark, tdir, batch)
-                components[name] = snap.read_table(self.spark, tdir)
-            elif self.table_format == "occ":
-                snap.merge_insert_ignore_occ(self.spark, tdir, batch, cas=self.cas)
-                components[name] = snap.read_manifest_table(self.spark, tdir)
-            else:
-                snap.merge_insert_ignore_incremental(self.spark, tdir, batch)
-                components[name] = snap.read_manifest_table(self.spark, tdir)
+            path = self._component_path(name)
+            if self.table_format == "occ":
+                snap.merge_insert_ignore_occ(self.spark, path, batch, cas=self.cas)
+                components[name] = snap.read_manifest_table(self.spark, path)
+            elif os.path.exists(path):
+                existing = self.spark.read.parquet(path)
+                components[name] = self._sink(insert_ignore(existing, batch), name)
+            else:  # CREATE TABLE … + first INSERT OR IGNORE
+                components[name] = self._sink(batch.distinct(), name)
         self._maybe_compact(components)
         return components
 
     def _maybe_compact(self, components: dict[str, DataFrame]) -> None:
         """Post-compress table maintenance (opt-in): small-files
         compaction via ``compact_target_mb`` and/or Z-order layout via
-        ``zorder_by`` (VERDICT r13 #7 — the Delta ``OPTIMIZE [ZORDER
-        BY]`` pair as one pass); re-points each entry at the rewritten
-        table. A component missing any ``zorder_by`` column keeps its
-        plain layout (the spec's component column lists differ — only
-        tables that HAVE the dimensions get the clustering). Snapshot
-        format: compaction is a no-op (every merge already rewrites
-        the table in one file set) but Z-order applies
-        (plans/snapshots.py:rewrite_snapshot_zordered)."""
+        ``zorder_by`` (the Delta ``OPTIMIZE [ZORDER BY]`` pair as one
+        pass); re-points each entry at the rewritten table. A component
+        missing any ``zorder_by`` column keeps its plain layout (the
+        spec's component column lists differ — only tables that HAVE
+        the dimensions get the clustering)."""
         if self.compact_target_mb is None and not self.zorder_by:
             return
         import math
@@ -253,7 +217,6 @@ class Pipeline:
             compact_small_files,
             write_zordered_auto,
         )
-        from k8e_fetch_spark.plans import snapshots as snap
 
         target_bytes = (self.compact_target_mb or 128) << 20
         for name in list(components):
@@ -264,23 +227,7 @@ class Pipeline:
                 and set(self.zorder_by) <= set(components[name].columns)
                 else None
             )
-            if self.table_format == "snapshot":
-                if zcols:
-                    live = sum(
-                        f.stat().st_size
-                        for f in (
-                            Path(path) / snap.current_snapshot(path)
-                        ).rglob("*.parquet")
-                    )
-                    snap.rewrite_snapshot_zordered(
-                        self.spark,
-                        path,
-                        zcols,
-                        n_files=max(1, math.ceil(live / target_bytes)),
-                    )
-                    components[name] = snap.read_table(self.spark, path)
-                continue
-            if self.table_format in ("manifest", "occ"):
+            if self.table_format == "occ":
                 if self.compact_target_mb is None and not zcols:
                     continue
                 live = sum(
@@ -295,32 +242,29 @@ class Pipeline:
                     zorder_by=zcols,
                     cas=self.cas,
                 )
-                # OCC tables vacuum under the default retention window
-                # (ADVICE r13): superseded dirs younger than the window
-                # survive this pass — a concurrent writer's in-flight
+                # default retention window: superseded dirs younger than
+                # it survive this pass — a concurrent writer's in-flight
                 # delta must never be deleted — and age out of a later
-                # vacuum. Pointer tables are single-writer: immediate.
+                # vacuum
                 snap.vacuum_manifest(path)
                 components[name] = snap.read_manifest_table(self.spark, path)
+                continue
+            if zcols:
+                tmp = path + ".__zorder__"
+                src = self.spark.read.parquet(path)
+                live = sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
+                write_zordered_auto(
+                    src, tmp, zcols, n_files=max(1, math.ceil(live / target_bytes))
+                )
+                shutil.rmtree(path)
+            elif self.compact_target_mb is not None:
+                tmp = path + ".__compact__"
+                compact_small_files(self.spark, path, tmp, target_bytes=target_bytes)
+                shutil.rmtree(path)
             else:
-                if zcols:
-                    tmp = path + ".__zorder__"
-                    src = self.spark.read.parquet(path)
-                    live = sum(
-                        f.stat().st_size for f in Path(path).rglob("*.parquet")
-                    )
-                    write_zordered_auto(
-                        src, tmp, zcols, n_files=max(1, math.ceil(live / target_bytes))
-                    )
-                    shutil.rmtree(path)
-                elif self.compact_target_mb is not None:
-                    tmp = path + ".__compact__"
-                    compact_small_files(self.spark, path, tmp, target_bytes=target_bytes)
-                    shutil.rmtree(path)
-                else:
-                    continue
-                os.replace(tmp, path)
-                components[name] = self.spark.read.parquet(path)
+                continue
+            os.replace(tmp, path)
+            components[name] = self.spark.read.parquet(path)
 
     # --- run ------------------------------------------------------------
     def run(
@@ -336,18 +280,14 @@ class Pipeline:
             paths = self.sync(selected, data_dir)
             tables = self.load(paths)
         else:  # memoized: re-read landed tables from the warehouse
-            # component tables in snapshot/manifest/occ format live
-            # beside the landed tables but are NOT flat parquet dirs —
-            # skip anything carrying a table-format marker file (OCC
-            # tables have no pointer, only the _OCC marker; reading one
-            # flat would treat its manifest-*.json files as data)
+            # occ component tables live beside the landed tables but are
+            # NOT flat parquet dirs — skip anything carrying the _OCC
+            # marker (reading one flat would treat its manifest-*.json
+            # files as data)
             tables = {
                 n: self.spark.read.parquet(os.path.join(self.warehouse, n))
                 for n in os.listdir(self.warehouse)
-                if not any(
-                    os.path.exists(os.path.join(self.warehouse, n, ptr))
-                    for ptr in ("_CURRENT", "_CURRENT_MANIFEST", "_OCC")
-                )
+                if not os.path.exists(os.path.join(self.warehouse, n, "_OCC"))
             }
         if "compress" in skip:
             return tables
@@ -356,14 +296,6 @@ class Pipeline:
     # --- sinks ----------------------------------------------------------
     def _component_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
-
-    def _read_component(self, name: str, like: DataFrame) -> DataFrame:
-        """Existing component table, or its empty clone (op-schema-clone:
-        CREATE TABLE IF NOT EXISTS … AS SELECT … LIMIT 0)."""
-        path = self._component_path(name)
-        if os.path.exists(path):
-            return self.spark.read.parquet(path)
-        return like.limit(0)
 
     def _sink(self, df: DataFrame, name: str) -> DataFrame:
         """op-table-sink: land as parquet and return the re-read frame.

@@ -202,188 +202,13 @@ def repair_header_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "compress_insert_ignore_tx",
-    # The oracle is the PLAIN relational answer — two overlapping batch
-    # definitions merged with set semantics. The declared side computes
-    # it through the full transactional machinery (two snapshot merges,
-    # a torn third write, a vacuum); equality proves readers resolved
-    # the published pointer and never the orphan (whose poison rows
-    # would hash-fail loudly).
-    oracle="""
-        SELECT DISTINCT o_custkey AS cust_key, o_orderstatus AS status
-        FROM orders WHERE o_orderkey % 4 IN (0, 1)
-        UNION
-        SELECT DISTINCT o_custkey AS cust_key, o_orderstatus AS status
-        FROM orders WHERE o_orderkey % 4 IN (1, 2)
-    """,
-    tags=("op-insert-ignore", "op-table-sink", "transactional"),
-)
-def compress_insert_ignore_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op-insert-ignore, TRANSACTIONAL form (VERDICT r10 #4): the
-    reference's one transactional behavior — ``INSERT OR IGNORE`` into
-    SQLite, which is atomic per statement (fetcher.bash:157-159) —
-    re-expressed with the snapshot-pointer table (plans/snapshots.py):
-    every merge writes a complete new snapshot and atomically flips a
-    ``_CURRENT`` pointer; a crash mid-write leaves an orphan directory,
-    never a torn table.
-
-    The declared scenario runs the whole lifecycle against a fresh
-    ephemeral table dir (mkdtemp + atexit cleanup — the same pattern
-    the real-stream queries use for their sinks; nothing persists
-    across sessions):
-
-    1. merge batch A (orders o_orderkey%4 in {0,1} -> distinct
-       (cust_key, status)) -> snap-000001 published;
-    2. merge overlapping batch B (%4 in {1,2}) -> snap-000002
-       published (the left-anti keeps A∪B set semantics);
-    3. SIMULATED TORN WRITE: a snap-000003 directory appears with
-       fully-written POISON rows (status='TORN', cust_key=-1..-5) but
-       the writer "crashes" BEFORE the pointer flip;
-    4. ``vacuum(keep=1)`` removes both the superseded snap-000001 and
-       the higher-numbered orphan (the keep window is anchored at the
-       LIVE snapshot, not the lexical max — the crash-orphan hazard
-       its docstring records);
-    5. the declared output is ``read_table`` — resolved through the
-       pointer.
-
-    The oracle is plain ``SELECT DISTINCT … UNION …``: if any reader
-    step had observed the orphan, five TORN rows would appear and the
-    driver hash would fail. Scale: each merge is one keyed left-anti
-    shuffle + a full rewrite of a dimension-sized component table —
-    the snapshot pattern's documented cost, with Delta/Iceberg as the
-    manifest-based drop-in once tables outgrow it."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from k8e_fetch_spark.plans import snapshots as snap
-
-    orders = load(spark, sf_dir, "orders")
-
-    def batch(mods):
-        return (
-            orders.filter((F.col("o_orderkey") % 4).isin(*mods))
-            .select(
-                F.col("o_custkey").alias("cust_key"),
-                F.col("o_orderstatus").alias("status"),
-            )
-            .distinct()
-        )
-
-    table_dir = tempfile.mkdtemp(prefix="k8e_tx_table_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
-    snap.merge_insert_ignore(spark, table_dir, batch([0, 1]))
-    live = snap.merge_insert_ignore(spark, table_dir, batch([1, 2]))
-    # torn write: a complete-looking snapshot directory whose writer
-    # died before _publish — the pointer still names `live`
-    poison = spark.createDataFrame(
-        [(-i, "TORN") for i in range(1, 6)], "cust_key bigint, status string"
-    )
-    poison.write.mode("overwrite").parquet(f"{table_dir}/snap-000003")
-    assert snap.current_snapshot(table_dir) == live  # crash != publish
-    removed = snap.vacuum(table_dir, keep=1)
-    assert "snap-000003" in removed and "snap-000001" in removed
-    return snap.read_table(spark, table_dir)
-
-
-@register(
-    "compress_insert_ignore_manifest",
-    # Same oracle CLASS as compress_insert_ignore_tx: the plain
-    # relational answer to three overlapping batch merges. The declared
-    # side computes it through the INCREMENTAL manifest machinery —
-    # per-merge delta writes, a torn delta + torn manifest, a
-    # checkpoint rewrite, a vacuum — so hash equality proves the
-    # incremental path's readers resolve only published manifests and
-    # the checkpoint/vacuum cycle is content-preserving.
-    oracle="""
-        SELECT DISTINCT o_custkey AS cust_key, o_orderstatus AS status
-        FROM orders WHERE o_orderkey % 6 IN (0, 1)
-        UNION
-        SELECT DISTINCT o_custkey AS cust_key, o_orderstatus AS status
-        FROM orders WHERE o_orderkey % 6 IN (1, 2)
-        UNION
-        SELECT DISTINCT o_custkey AS cust_key, o_orderstatus AS status
-        FROM orders WHERE o_orderkey % 6 IN (2, 3)
-    """,
-    tags=("op-insert-ignore", "op-table-sink", "transactional", "manifest"),
-)
-def compress_insert_ignore_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op-insert-ignore, INCREMENTAL manifest form (r12): the snapshot-
-    pointer table (compress_insert_ignore_tx) rewrites the FULL table
-    per merge — the honest cost this form removes. A manifest table's
-    merge writes ONLY ``new ∖ current`` as a delta directory plus a
-    small JSON manifest naming every live directory; the atomic
-    pointer flip is unchanged. Write volume per merge drops from
-    O(table) to O(delta) — at 100 TB this is the difference between a
-    table you can merge into hourly and one you cannot; it is exactly
-    the file-manifest mechanism Delta/Iceberg generalize
-    (plans/snapshots.py:merge_insert_ignore_incremental).
-
-    Declared lifecycle against an ephemeral dir (mkdtemp + atexit, the
-    tx query's pattern):
-
-    1. three OVERLAPPING batches merge incrementally (o_orderkey%6
-       selectors {0,1}/{1,2}/{2,3} — each delta is a proper subset of
-       its batch, so the anti-join is doing real work);
-    2. an idempotency probe re-merges batch 2 (a fully-contained
-       batch publishes NOTHING — asserted on the manifest name);
-    3. SIMULATED TORN WRITE: a complete-looking poison delta AND a
-       torn higher-numbered manifest appear, pointer never flipped;
-    4. ``checkpoint`` rewrites the live set into one base dir
-       (coalesce — narrow, the compaction path) and ``vacuum_manifest``
-       reclaims the superseded deltas AND the torn garbage;
-    5. the declared output reads through the final manifest.
-
-    The oracle is the plain three-way DISTINCT UNION: poison rows or a
-    content-mangling checkpoint hash-fail loudly."""
-    import atexit
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from k8e_fetch_spark.plans import snapshots as snap
-
-    orders = load(spark, sf_dir, "orders")
-
-    def batch(mods):
-        return (
-            orders.filter((F.col("o_orderkey") % 6).isin(*mods))
-            .select(
-                F.col("o_custkey").alias("cust_key"),
-                F.col("o_orderstatus").alias("status"),
-            )
-            .distinct()
-        )
-
-    table_dir = tempfile.mkdtemp(prefix="k8e_manifest_table_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
-    snap.merge_insert_ignore_incremental(spark, table_dir, batch([0, 1]))
-    m2 = snap.merge_insert_ignore_incremental(spark, table_dir, batch([1, 2]))
-    m3 = snap.merge_insert_ignore_incremental(spark, table_dir, batch([2, 3]))
-    # idempotency: a contained batch publishes nothing
-    assert snap.merge_insert_ignore_incremental(spark, table_dir, batch([1, 2])) == m3
-    # torn write: poison delta + torn manifest, pointer still names m3
-    poison = spark.createDataFrame(
-        [(-i, "TORN") for i in range(1, 6)], "cust_key bigint, status string"
-    )
-    poison.write.parquet(f"{table_dir}/delta-000099")
-    Path(f"{table_dir}/manifest-000099.json").write_text('{"dirs": ["delta-000099"]}')
-    assert snap.current_manifest(table_dir) == m3  # crash != publish
-    snap.checkpoint(spark, table_dir, n_files=1)
-    removed = snap.vacuum_manifest(table_dir)
-    assert "delta-000099" in removed and "manifest-000099.json" in removed
-    assert m2 in removed
-    return snap.read_manifest_table(spark, table_dir)
-
-
-@register(
     "compress_insert_ignore_occ",
-    # Same oracle CLASS as the tx/manifest forms: the plain relational
-    # answer to three overlapping batch merges (%7 selectors so this
-    # row's content is distinct from its siblings'). The declared side
-    # computes it through the OCC commit protocol — version-claim CAS,
-    # a rejected stale commit, checkpoint, vacuum — so hash equality
-    # proves the concurrent-writer path is content-preserving.
+    # The oracle is the PLAIN relational answer to three overlapping
+    # batch merges (%7 selectors). The declared side computes it
+    # through the OCC commit protocol — version-claim CAS, a rejected
+    # stale commit, an unpublished poison delta, checkpoint, vacuum —
+    # so hash equality proves the transactional path is
+    # content-preserving and never reads an uncommitted delta.
     oracle="""
         SELECT DISTINCT o_custkey AS cust_key, o_orderstatus AS status
         FROM orders WHERE o_orderkey % 7 IN (0, 1)
@@ -397,13 +222,12 @@ def compress_insert_ignore_manifest(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("op-insert-ignore", "op-table-sink", "transactional", "occ"),
 )
 def compress_insert_ignore_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op-insert-ignore under CONCURRENT writers (r13): the manifest
-    table's one remaining single-writer assumption removed. Two racing
-    merges on the pointer protocol can compute the same next version —
-    the second delta write clobbers the first's data directory and
-    last-pointer-wins drops a committed merge. The OCC form
-    (plans/snapshots.py:merge_insert_ignore_occ) makes the VERSION
-    NUMBER the compare-and-swap token: a commit claims
+    """op-insert-ignore, TRANSACTIONAL form: the reference's one
+    transactional behavior — ``INSERT OR IGNORE`` into SQLite, atomic
+    per statement (fetcher.bash:157-159) — re-expressed with the OCC
+    manifest table (plans/snapshots.py:merge_insert_ignore_occ). Each
+    merge writes only ``new ∖ current`` as a delta directory, and the
+    VERSION NUMBER is the compare-and-swap token: a commit claims
     ``manifest-{N+1}`` atomically (os.link from a fully-written temp —
     the conditional-PUT / catalog-CAS move Delta-on-S3 and Iceberg
     use), delta dirs carry writer-unique names, and a lost race
@@ -418,12 +242,16 @@ def compress_insert_ignore_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
     3. a STALE COMMIT for an already-claimed version is attempted
        directly and must be REJECTED (ManifestConflictError) — the CAS
        doing its job end to end, asserted in the declared query;
-    4. no pointer file exists (the version chain is the commit log);
-    5. ``checkpoint`` + ``vacuum_manifest`` run through the OCC
-       dispatch; the declared output reads the final state.
+    4. SIMULATED TORN WRITE: a complete-looking POISON delta directory
+       (cust_key=-1..-5, status='TORN') appears but its writer "dies"
+       before the CAS claim — the current manifest is unchanged;
+    5. ``checkpoint`` + ``vacuum_manifest`` (exclusive access on this
+       private dir, so no retention window) compact the live set and
+       reclaim the poison; the declared output reads the final state.
 
     The oracle is the plain three-way DISTINCT UNION: a dropped merge,
-    a clobbered delta, or a content-mangling checkpoint hash-fails."""
+    a clobbered delta, a read of the unpublished poison delta, or a
+    content-mangling checkpoint hash-fails."""
     import atexit
     import json
     import shutil
@@ -457,8 +285,14 @@ def compress_insert_ignore_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("stale commit must conflict")
     except snap.ManifestConflictError:
         pass
-    # OCC tables have no pointer — the version chain is authoritative
-    assert not (Path(table_dir) / "_CURRENT_MANIFEST").exists()
+    # torn write: a fully-written delta whose writer died before its
+    # commit — no manifest names it, so no reader ever opens it
+    poison = spark.createDataFrame(
+        [(-i, "TORN") for i in range(1, 6)], "cust_key bigint, status string"
+    )
+    poison.write.parquet(f"{table_dir}/delta-000099-torn")
+    assert snap.current_manifest(table_dir) == m3  # crash != commit
     snap.checkpoint(spark, table_dir, n_files=1)
-    snap.vacuum_manifest(table_dir)
+    removed = snap.vacuum_manifest(table_dir, retain_seconds=0.0)
+    assert "delta-000099-torn" in removed
     return snap.read_manifest_table(spark, table_dir)

@@ -24,7 +24,7 @@ Re-expresses the reference's import pipe — ``unzip -p f | iconv -f ENC
 
 Scale notes: one zip member = one input task (zip DEFLATE streams are
 not splittable); downstream width is restored by ``repartition`` after
-decode — call :func:`rebalance_after_decode` when the member is large.
+decode.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from k8e_fetch_spark.operators.repair import normalize_header_name, quote_repair
+from k8e_fetch_spark.session import ship_package
 
 LINES_SCHEMA = T.StructType(
     [
@@ -146,9 +147,12 @@ def _decode_member(name: str, raw: bytes, encoding: str) -> Iterator[tuple[str, 
 def raw_lines(spark: SparkSession, paths: list[str], encoding: str) -> DataFrame:
     """op-zip-extract + op-transcode: binary scan → streaming decode to
     (path, line_no, line). Python touches bytes only here; everything
-    after is JVM-side."""
+    after is JVM-side. The decode runs in Python workers, which import
+    this package: ship it to them first, so a driver that found the
+    package through ``sys.path`` works from any working directory."""
     import pandas as pd
 
+    ship_package(spark)
     binary = spark.read.format("binaryFile").load(paths)
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -261,9 +265,3 @@ def read_source(spark: SparkSession, paths: list[str], spec: ReaderSpec) -> Data
             df = df.withColumn(c, F.lit(None).cast("string"))
     return df
 
-
-def rebalance_after_decode(df: DataFrame, partitions: int) -> DataFrame:
-    """Zip members are unsplittable (one member = one decode task);
-    restore plan width for downstream shuffles/aggregations. At cluster
-    scale: partitions ≈ decoded_bytes / 128MB."""
-    return df.repartition(partitions)

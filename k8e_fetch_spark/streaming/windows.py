@@ -526,10 +526,9 @@ def run_minhash_dedup_stream(
     (``id_col, text_col``). ``corpus`` is the initial batch corpus; on
     first run its :func:`~k8e_fetch_spark.operators.similarity.
     minhash_store_relation` — one row per doc: shingle set + LSH band
-    keys, NOT the text — is materialized ONCE into an incremental
-    manifest table at ``store_dir`` (``plans/snapshots.py``
-    append-delta + manifest-pointer machinery: O(delta) writes, atomic
-    publishes, crash-orphan = garbage never corruption). Each
+    keys, NOT the text — is materialized ONCE into an OCC manifest
+    table at ``store_dir`` (``plans/snapshots.py``: O(delta) writes,
+    atomic CAS commits, crash-orphan = garbage never corruption). Each
     micro-batch then:
 
     1. computes the batch's OWN relation once, flags it against the
@@ -543,7 +542,7 @@ def run_minhash_dedup_stream(
        micro-batch rewrites its own ledger entry instead of
        duplicating pairs;
     2. merges the SAME batch relation into the store
-       (``merge_insert_ignore_incremental`` — the anti-join makes a
+       (``merge_insert_ignore_occ`` — the anti-join makes a
        redelivered batch an empty delta, so store growth is idempotent
        too), which is what lets a batch-2 doc match a batch-1 doc: the
        cross-micro-batch property;
@@ -571,7 +570,7 @@ def run_minhash_dedup_stream(
     )
     from k8e_fetch_spark.plans.snapshots import (
         current_manifest,
-        merge_insert_ignore_incremental,
+        merge_insert_ignore_occ,
         read_manifest_table,
         vacuum_manifest,
     )
@@ -581,7 +580,7 @@ def run_minhash_dedup_stream(
 
     spark = new_docs.sparkSession
     if current_manifest(store_dir) is None:
-        merge_insert_ignore_incremental(
+        merge_insert_ignore_occ(
             spark,
             store_dir,
             minhash_store_relation(
@@ -617,8 +616,10 @@ def run_minhash_dedup_stream(
             .write.mode("overwrite")
             .parquet(os.path.join(results_dir, f"batch-{batch_id:05d}"))
         )
-        merge_insert_ignore_incremental(spark, store_dir, rel_b)
-        vacuum_manifest(store_dir, keep=retain_manifests)
+        merge_insert_ignore_occ(spark, store_dir, rel_b)
+        # the stream is the store's only writer: no in-flight deltas to
+        # protect, so superseded manifests go at once
+        vacuum_manifest(store_dir, keep=retain_manifests, retain_seconds=0.0)
 
     q = (
         new_docs.writeStream.foreachBatch(flag_and_absorb)

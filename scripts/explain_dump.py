@@ -132,7 +132,7 @@ def main() -> None:
         )
         print(f"```\n{formatted(compact)}\n```")
 
-        from k8e_fetch_spark.operators.dedup import insert_ignore
+        from k8e_fetch_spark.operators.dedup import insert_ignore_delta
         from k8e_fetch_spark.plans import snapshots as snap
 
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -149,26 +149,26 @@ def main() -> None:
                 .distinct()
             )
 
-        tdir = f"{work}/tx_table"
-        snap.merge_insert_ignore(spark, tdir, batch([0, 1]))
-        cur = snap.read_table(spark, tdir)
-        merged = insert_ignore(cur, batch([1, 2]))
+        tdir = f"{work}/occ_table"
+        snap.merge_insert_ignore_occ(spark, tdir, batch([0, 1]))
+        cur = snap.read_manifest_table(spark, tdir)
+        delta = insert_ignore_delta(cur, batch([1, 2]))
         print(
-            "\n## compress_insert_ignore_tx (the merge plan, snapshot 2)"
-            "\n\n*Transactional INSERT-OR-IGNORE merge (plans/snapshots.py):"
-            " the published snapshot's content is `current ∪ (new ∖ current)`"
-            " — ONE null-safe left-anti join of the incoming batch against"
-            " the live snapshot scan plus the union write; the atomicity is"
-            " filesystem-level (complete snapshot dir + atomic pointer"
-            " rename), so nothing transactional appears in — or burdens —"
-            " the Spark plan itself. The declared registry query runs two"
-            " merges, a simulated torn write and a vacuum around this plan."
-            " The r12 INCREMENTAL manifest form"
-            " (compress_insert_ignore_manifest) plans the SAME anti-join but"
-            " sinks ONLY its output — the delta — instead of the union:"
-            " write volume O(delta), not O(table).*\n"
+            "\n## compress_insert_ignore_occ (the merge plan, version 2)"
+            "\n\n*Transactional INSERT-OR-IGNORE merge (plans/snapshots.py:"
+            "merge_insert_ignore_occ): the delta written for version 2 is"
+            " `new ∖ current` — ONE null-safe left-anti join of the incoming"
+            " batch against the live manifest's scan"
+            " (operators/dedup.py:insert_ignore_delta), and only that delta"
+            " is written: write volume O(delta), not O(table). The atomicity"
+            " is filesystem-level (writer-unique delta dir + a compare-and-swap"
+            " claim of the next manifest version), so nothing transactional"
+            " appears in — or burdens — the Spark plan itself. The declared"
+            " registry query runs three merges, a rejected stale commit, a"
+            " simulated torn write, a checkpoint and a vacuum around this"
+            " plan.*\n"
         )
-        print(f"```\n{formatted(merged)}\n```")
+        print(f"```\n{formatted(delta)}\n```")
 
         from pyspark.sql import functions as F
 
@@ -268,9 +268,9 @@ def main() -> None:
         " — operators/similarity.py:_pairs_new_vs_old, equivalence pinned"
         " in tests/test_similarity.py), the store read is"
         " read_manifest_table's manifest-resolved parquet scan, and the"
-        " store growth is merge_insert_ignore_incremental's anti-join +"
-        " O(delta) write (the compress_insert_ignore_manifest plan, dumped"
-        " in its tx twin above). Cross-micro-batch flagging + manifest"
+        " store growth is merge_insert_ignore_occ's anti-join + O(delta)"
+        " write (the compress_insert_ignore_occ plan, dumped above)."
+        " Cross-micro-batch flagging + manifest"
         " retention are pinned in tests/test_streaming.py; the"
         " arrival-ordered oracle is hash-checked by the driver.*"
     )

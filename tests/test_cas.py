@@ -51,10 +51,12 @@ def _make_store_handler(responses: list[int]):
         def do_PUT(self):
             if self.headers.get("If-None-Match") != "*":
                 # the whole point is create-if-absent; an unconditional
-                # PUT from commit code is a protocol bug — fail loudly
+                # PUT from commit code is a protocol bug — fail loudly.
+                # Record before responding: the client may assert on
+                # ``responses`` as soon as it reads the status.
+                responses.append(400)
                 self.send_response(400)
                 self.end_headers()
-                responses.append(400)
                 return
             raw = self.rfile.read(int(self.headers.get("Content-Length", 0)))
             obj = Path("/" + urllib.parse.unquote(self.path).lstrip("/"))
@@ -63,13 +65,13 @@ def _make_store_handler(responses: list[int]):
                 link.claim(obj.parent, obj.name, raw.decode("utf-8"))
             except ManifestConflictError:
                 # S3 answers a failed If-None-Match with 412
+                responses.append(412)
                 self.send_response(412)
                 self.end_headers()
-                responses.append(412)
                 return
+            responses.append(201)
             self.send_response(201)
             self.end_headers()
-            responses.append(201)
 
     return Handler
 

@@ -68,9 +68,25 @@ def test_cli_pipeline_cas_endpoint_requires_occ(capsys):
     with pytest.raises(SystemExit) as exc:
         cli.main([
             "pipeline", "--warehouse", "/tmp/w",
-            "--table-format", "manifest",
+            "--table-format", "parquet",
             "--cas-endpoint", "http://localhost:9999",
         ])
     assert exc.value.code == 2
     err = capsys.readouterr().err
     assert "cas backend requires table_format='occ'" in err
+
+
+@pytest.mark.parametrize("fmt", ["snapshot", "manifest"])
+def test_cli_pipeline_rejects_retired_table_formats(fmt, capsys):
+    """--table-format accepts exactly parquet and occ; the retired
+    snapshot-pointer and pointer-manifest layouts are usage errors, and
+    the library refuses them too."""
+    from k8e_fetch_spark.plans.pipeline import Pipeline
+    from k8e_fetch_spark.plans.spec import DEFAULT_SPEC
+
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["pipeline", "--warehouse", "/tmp/w", "--table-format", fmt])
+    assert exc.value.code == 2
+    assert "invalid choice" in capsys.readouterr().err
+    with pytest.raises(ValueError, match=r"parquet\|occ"):
+        Pipeline(None, DEFAULT_SPEC, "/tmp/w", table_format=fmt)

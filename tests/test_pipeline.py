@@ -167,73 +167,6 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_pipeline_front_door_manifest_format_with_compaction(spark, tmp_path):
-    """VERDICT r12 #4: the maintenance machinery reachable from the
-    pipeline front door. fetch→load→compress lands the components as
-    incremental MANIFEST tables, the post-compress maintenance
-    checkpoints them into one compacted base, and the content is
-    identical to the plain-parquet flow. A rerun is a no-op on both
-    content and the manifest chain (empty delta publishes nothing)."""
-    from k8e_fetch_spark.plans.snapshots import current_manifest, read_manifest_table
-
-    ref = Pipeline(spark, DEFAULT_SPEC, str(tmp_path / "ref"))
-    ref_components = ref.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
-
-    wh = tmp_path / "wh_manifest"
-    pipe = Pipeline(
-        spark, DEFAULT_SPEC, str(wh), table_format="manifest", compact_target_mb=64
-    )
-    components = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
-    assert set(components) == set(ref_components)
-    for name in components:
-        cols = sorted(ref_components[name].columns)
-        assert _rows(components[name], cols) == _rows(ref_components[name], cols), name
-        # manifest table on disk, checkpointed+vacuumed to one base dir
-        tdir = wh / name
-        assert (tdir / "_CURRENT_MANIFEST").exists()
-        live = current_manifest(tdir)
-        assert live is not None
-        data_dirs = [p.name for p in tdir.iterdir() if p.is_dir()]
-        assert data_dirs == [f"base-{live.split('-')[1].split('.')[0]}"]
-    # rerun: same content, same manifest (delta empty -> no publish)
-    before = {n: current_manifest(wh / n) for n in components}
-    again = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
-    for name in again:
-        cols = sorted(ref_components[name].columns)
-        assert _rows(again[name], cols) == _rows(ref_components[name], cols)
-    after = {n: current_manifest(wh / n) for n in components}
-    # compaction republishes once per run; the MERGE itself was a no-op
-    # (no new delta dir appeared beyond the checkpoint base)
-    for name in components:
-        tdir = wh / name
-        assert not any(p.name.startswith("delta-") for p in tdir.iterdir() if p.is_dir())
-    assert read_manifest_table(spark, wh / "c_name").count() == 5
-    del before, after  # chain growth is bounded by checkpoint+vacuum, asserted above
-
-
-def test_pipeline_front_door_snapshot_format(spark, tmp_path):
-    """Snapshot table format from the front door: same content as the
-    parquet flow, pointer-flip layout on disk, idempotent rerun."""
-    from k8e_fetch_spark.plans.snapshots import current_snapshot
-
-    ref = Pipeline(spark, DEFAULT_SPEC, str(tmp_path / "ref"))
-    ref_components = ref.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
-
-    wh = tmp_path / "wh_snap"
-    pipe = Pipeline(spark, DEFAULT_SPEC, str(wh), table_format="snapshot")
-    components = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
-    assert set(components) == set(ref_components)
-    for name in components:
-        cols = sorted(ref_components[name].columns)
-        assert _rows(components[name], cols) == _rows(ref_components[name], cols), name
-        assert current_snapshot(wh / name) == "snap-000001"
-    # rerun: content unchanged; merge publishes a new (identical) snapshot
-    again = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
-    for name in again:
-        cols = sorted(ref_components[name].columns)
-        assert _rows(again[name], cols) == _rows(ref_components[name], cols)
-
-
 def test_pipeline_parquet_compaction_swaps_in_place(spark, tmp_path):
     """compact_target_mb on the default parquet format: content
     identical, single output file per (tiny) component, original flow
@@ -250,11 +183,16 @@ def test_pipeline_parquet_compaction_swaps_in_place(spark, tmp_path):
 
 
 def test_pipeline_front_door_occ_format(spark, tmp_path):
-    """table_format='occ' (r13): same content as the plain-parquet
-    flow, OCC layout on disk (the _OCC marker, NO pointer file —
-    CAS-committed version chain), idempotent rerun (contained batch
-    publishes nothing)."""
-    from k8e_fetch_spark.plans.snapshots import current_manifest, read_manifest_table
+    """table_format='occ': same content as the plain-parquet flow, OCC
+    layout on disk (the _OCC marker, NO pointer file — CAS-committed
+    version chain), idempotent rerun (contained batch publishes
+    nothing); with compact_target_mb, checkpointed to one base per
+    table."""
+    from k8e_fetch_spark.plans.snapshots import (
+        _manifest_dirs,
+        current_manifest,
+        read_manifest_table,
+    )
 
     ref = Pipeline(spark, DEFAULT_SPEC, str(tmp_path / "ref"))
     ref_components = ref.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
@@ -278,6 +216,37 @@ def test_pipeline_front_door_occ_format(spark, tmp_path):
         assert current_manifest(wh / name) == "manifest-000001.json"
     assert read_manifest_table(spark, wh / "c_name").count() == 5
 
+    # compact_target_mb: the post-compress maintenance checkpoints each
+    # table into one compacted base (same content); a rerun's merge is
+    # a no-op (no new delta dir), and the superseded delta stays for
+    # the retention window of the vacuum
+    wh = tmp_path / "wh_occ_compact"
+    pipe = Pipeline(
+        spark, DEFAULT_SPEC, str(wh), table_format="occ", compact_target_mb=64
+    )
+    components = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
+    deltas = {}
+    for name in components:
+        cols = sorted(ref_components[name].columns)
+        assert _rows(components[name], cols) == _rows(ref_components[name], cols), name
+        tdir = wh / name
+        live = current_manifest(tdir)
+        assert live == "manifest-000002.json"
+        (base,) = _manifest_dirs(tdir, live)
+        assert base.startswith("base-000002-")
+        deltas[name] = sorted(p.name for p in tdir.iterdir() if p.name.startswith("delta-"))
+        assert len(deltas[name]) == 1
+    again = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
+    for name in again:
+        cols = sorted(ref_components[name].columns)
+        assert _rows(again[name], cols) == _rows(ref_components[name], cols)
+        tdir = wh / name
+        assert sorted(
+            p.name for p in tdir.iterdir() if p.name.startswith("delta-")
+        ) == deltas[name]
+        (base,) = _manifest_dirs(tdir, current_manifest(tdir))
+        assert base.startswith("base-000003-")
+
 
 def test_pipeline_front_door_zorder_layout_all_formats(spark, tmp_path):
     """VERDICT r13 #7: fetch→compress→zorder lifecycle from the front
@@ -287,18 +256,13 @@ def test_pipeline_front_door_zorder_layout_all_formats(spark, tmp_path):
     identity against the plain-parquet flow on every table format;
     parquet additionally pins that the layout actually changed row
     order within the rewritten files (clustered, not pass-through)."""
-    from k8e_fetch_spark.plans.snapshots import (
-        current_manifest,
-        current_snapshot,
-        read_manifest_table,
-        read_table,
-    )
+    from k8e_fetch_spark.plans.snapshots import current_manifest, read_manifest_table
 
     ref = Pipeline(spark, DEFAULT_SPEC, str(tmp_path / "ref"))
     ref_components = ref.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
     zcols = ["ncid", "last_name"]  # c_name has both; c_status has neither
 
-    for fmt in ("parquet", "snapshot", "manifest", "occ"):
+    for fmt in ("parquet", "occ"):
         wh = tmp_path / f"wh_z_{fmt}"
         pipe = Pipeline(
             spark,
@@ -317,10 +281,7 @@ def test_pipeline_front_door_zorder_layout_all_formats(spark, tmp_path):
             ), (fmt, name)
         tdir = wh / "c_name"
         if fmt == "parquet":
-            assert not (tdir / "_CURRENT").exists()
-        elif fmt == "snapshot":
-            assert current_snapshot(tdir) is not None
-            assert read_table(spark, tdir).count() == 5
+            assert not (tdir / "_OCC").exists()
         else:
             assert current_manifest(tdir) is not None
             assert read_manifest_table(spark, tdir).count() == 5
@@ -421,5 +382,70 @@ def test_pipeline_front_door_occ_over_conditional_put(spark, tmp_path):
         t.join(timeout=5)
     with _pytest.raises(ValueError, match="occ"):
         Pipeline(
-            spark, DEFAULT_SPEC, str(tmp_path / "bad"), table_format="manifest", cas=cas
+            spark, DEFAULT_SPEC, str(tmp_path / "bad"), table_format="parquet", cas=cas
         )
+
+
+def test_compress_merges_each_component_once(spark, tmp_path, monkeypatch):
+    """compress builds each component's batch from every matched source
+    and merges it ONCE: two sources feed each of the four components in
+    the packaged fixtures, yet a first run needs no insert_ignore (there
+    is no existing table to anti-join against) and a rerun calls it
+    once per component."""
+    import k8e_fetch_spark.plans.pipeline as pipeline_mod
+
+    calls = []
+    real = pipeline_mod.insert_ignore
+
+    def spy(existing, new):
+        calls.append(1)
+        return real(existing, new)
+
+    monkeypatch.setattr(pipeline_mod, "insert_ignore", spy)
+    pipe = Pipeline(spark, DEFAULT_SPEC, str(tmp_path / "wh"))
+    first = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
+    assert len(first) == 4 and len(calls) == 0
+    again = pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
+    assert len(calls) == 4
+    assert again["c_name"].count() == 5
+
+
+def test_pipeline_runs_off_repo_without_pythonpath(tmp_path):
+    """A driver that found the package through ``sys.path`` (not an
+    install, not the working directory) runs the whole pipeline: the
+    Python decode workers get the package shipped to them. Runs in a
+    fresh process whose working directory is outside the repo and whose
+    environment has no PYTHONPATH."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    prog = textwrap.dedent(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])
+        from k8e_fetch_spark.plans.pipeline import Pipeline
+        from k8e_fetch_spark.plans.spec import DEFAULT_SPEC
+        from k8e_fetch_spark.resources import fixtures_root
+        from k8e_fetch_spark.session import get_spark
+
+        spark = get_spark(app_name="off-repo-pipeline", cpus=2, shuffle_partitions=2)
+        fx = fixtures_root()
+        comps = Pipeline(spark, DEFAULT_SPEC, "wh").run(str(fx / "manifest.json"), str(fx))
+        print("c_name rows:", comps["c_name"].count())
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", prog, str(Path(__file__).resolve().parents[1])],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "c_name rows: 5" in proc.stdout

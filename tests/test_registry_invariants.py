@@ -162,9 +162,7 @@ def test_write_side_effect_queries_stay_closed():
     _ensure_loaded()
     ALLOWED = {
         # ephemeral mkdtemp table dirs (atexit-cleaned, per-process)
-        "compress_insert_ignore_tx",
-        "compress_insert_ignore_manifest",
-        "compress_insert_ignore_occ",  # r13: OCC manifest lifecycle
+        "compress_insert_ignore_occ",  # OCC manifest-table lifecycle
         "maintenance_compact_small_files",
         "maintenance_zorder_layout",
         # warehouse bucket tables / fixture trees (fingerprint-isolated,

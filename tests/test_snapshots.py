@@ -1,139 +1,133 @@
-"""Transactional snapshot-pointer MERGE (plans/snapshots.py): atomic
-publish, idempotency, crash-orphan invisibility, vacuum."""
+"""Transactional component tables (plans/snapshots.py): the OCC
+manifest table — atomic O(delta) merges, idempotency, torn-write
+invisibility, checkpoint, vacuum with a keep window and a retention
+window, time travel, concurrent-writer CAS commits."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
 from k8e_fetch_spark.plans.snapshots import (
-    current_snapshot,
-    merge_insert_ignore,
-    read_table,
-    vacuum,
+    checkpoint,
+    current_manifest,
+    manifest_versions,
+    merge_insert_ignore_occ,
+    read_manifest_table,
+    vacuum_manifest,
 )
 
 
+def _sorted_rows(df):
+    key = lambda t: tuple((v is None, v) for v in t)  # noqa: E731 (None-safe sort)
+    return sorted((tuple(r) for r in df.collect()), key=key)
+
+
 def _rows(spark, tdir):
-    df = read_table(spark, tdir)
+    df = read_manifest_table(spark, tdir)
     return set() if df is None else {tuple(r) for r in df.collect()}
 
 
 def test_merge_publishes_and_is_idempotent(spark, tmp_path):
     tdir = tmp_path / "component"
     a = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
-    s1 = merge_insert_ignore(spark, tdir, a)
-    assert current_snapshot(tdir) == s1
+    m1 = merge_insert_ignore_occ(spark, tdir, a)
+    assert current_manifest(tdir) == m1
     assert _rows(spark, tdir) == {(1, "x"), (2, "y")}
 
-    # merging the SAME batch again adds nothing (op-insert-ignore)
-    s2 = merge_insert_ignore(spark, tdir, a)
-    assert s2 != s1 and _rows(spark, tdir) == {(1, "x"), (2, "y")}
+    # merging the SAME batch again adds nothing (op-insert-ignore) and
+    # publishes nothing
+    assert merge_insert_ignore_occ(spark, tdir, a) == m1
+    assert _rows(spark, tdir) == {(1, "x"), (2, "y")}
 
     # a new batch with one overlap adds only the novel row
     b = spark.createDataFrame([(2, "y"), (3, "z")], "k int, v string")
-    merge_insert_ignore(spark, tdir, b)
+    merge_insert_ignore_occ(spark, tdir, b)
     assert _rows(spark, tdir) == {(1, "x"), (2, "y"), (3, "z")}
 
 
 def test_empty_table_reads_none(spark, tmp_path):
-    assert read_table(spark, tmp_path / "nothing") is None
+    assert read_manifest_table(spark, tmp_path / "nothing") is None
+    assert current_manifest(tmp_path / "nothing") is None
 
 
 def test_crash_orphan_is_invisible_until_published(spark, tmp_path):
-    """A half-written snapshot directory without a pointer flip must
-    not change what readers see — the crash-safety contract."""
+    """A fully-written delta directory whose writer died before its CAS
+    commit must not change what readers see — the crash-safety
+    contract."""
     tdir = tmp_path / "component"
     a = spark.createDataFrame([(1, "x")], "k int, v string")
-    s1 = merge_insert_ignore(spark, tdir, a)
+    m1 = merge_insert_ignore_occ(spark, tdir, a)
 
-    # simulate a writer that died after writing files, before the flip
-    orphan = Path(tdir) / "snap-000099"
+    # simulate a writer that died after writing files, before the commit
+    orphan = Path(tdir) / "delta-000002-dead"
     spark.createDataFrame([(9, "junk")], "k int, v string").write.parquet(str(orphan))
-    assert current_snapshot(tdir) == s1
+    assert current_manifest(tdir) == m1
     assert _rows(spark, tdir) == {(1, "x")}
 
-    # vacuum removes the orphan, keeps the live snapshot
-    removed = vacuum(tdir, keep=1)
-    assert "snap-000099" in removed
+    # vacuum (exclusive access: no retention) removes the orphan only
+    removed = vacuum_manifest(tdir, keep=1, retain_seconds=0.0)
+    assert removed == ["delta-000002-dead"]
     assert _rows(spark, tdir) == {(1, "x")}
 
 
 def test_vacuum_keeps_history_window(spark, tmp_path):
     tdir = tmp_path / "component"
     for i in range(4):
-        merge_insert_ignore(
+        merge_insert_ignore_occ(
             spark, tdir, spark.createDataFrame([(i, "v")], "k int, v string")
         )
-    live = current_snapshot(tdir)
-    removed = vacuum(tdir, keep=2)
-    kept = sorted(
-        p.name for p in Path(tdir).iterdir() if p.is_dir() and p.name.startswith("snap-")
-    )
-    assert live in kept and len(kept) == 2
-    assert len(removed) == 2
-
-
-def _sorted_rows(df):
-    return sorted(tuple(r) for r in df.collect())
+    live = current_manifest(tdir)
+    removed = vacuum_manifest(tdir, keep=2, retain_seconds=0.0)
+    assert sorted(removed) == ["manifest-000001.json", "manifest-000002.json"]
+    assert manifest_versions(tdir) == [3, 4]
+    assert current_manifest(tdir) == live
+    assert _rows(spark, tdir) == {(i, "v") for i in range(4)}
 
 
 def test_manifest_merge_is_incremental_and_idempotent(spark, tmp_path):
-    """The r12 manifest table: merges write ONLY the delta directory
-    (write volume O(delta), not O(table)); a fully-contained re-merge
-    publishes NOTHING (same manifest name back, no new dirs, no chain
-    growth); content equals the full-rewrite snapshot semantics."""
-    from k8e_fetch_spark.plans.snapshots import (
-        current_manifest,
-        merge_insert_ignore_incremental,
-        read_manifest_table,
-    )
-
+    """Merges write ONLY the delta directory (write volume O(delta),
+    not O(table)); a fully-contained re-merge publishes NOTHING (same
+    manifest name back, no new dirs, no chain growth); the match is
+    null-safe, so a NULL-bearing row merges once."""
     t = str(tmp_path / "mt")
-    a = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
-    b = spark.createDataFrame([(2, "y"), (3, "z")], "k int, v string")
+    a = spark.createDataFrame([(1, "x"), (2, "y"), (None, "n")], "k int, v string")
+    b = spark.createDataFrame([(2, "y"), (3, "z"), (None, "n")], "k int, v string")
 
-    m1 = merge_insert_ignore_incremental(spark, t, a)
+    m1 = merge_insert_ignore_occ(spark, t, a)
     assert current_manifest(t) == m1
-    m2 = merge_insert_ignore_incremental(spark, t, b)
+    m2 = merge_insert_ignore_occ(spark, t, b)
     assert m2 != m1
     got = _sorted_rows(read_manifest_table(spark, t))
-    assert got == [(1, "x"), (2, "y"), (3, "z")]
-    # delta-000002 must hold ONLY the new row
-    d2 = _sorted_rows(spark.read.parquet(f"{t}/delta-000002"))
-    assert d2 == [(3, "z")]
+    assert got == [(1, "x"), (2, "y"), (3, "z"), (None, "n")]
+    # the version-2 delta must hold ONLY the new row
+    (d2,) = [p for p in Path(t).iterdir() if p.name.startswith("delta-000002-")]
+    assert _sorted_rows(spark.read.parquet(str(d2))) == [(3, "z")]
     # idempotent re-merge: no new manifest, no new dirs
     dirs_before = sorted(p.name for p in Path(t).iterdir())
-    m3 = merge_insert_ignore_incremental(spark, t, b)
+    m3 = merge_insert_ignore_occ(spark, t, b)
     assert m3 == m2
     assert sorted(p.name for p in Path(t).iterdir()) == dirs_before
     assert _sorted_rows(read_manifest_table(spark, t)) == got
 
 
 def test_manifest_torn_delta_is_invisible_and_vacuumed(spark, tmp_path):
-    """A writer that dies AFTER writing its delta (or even a
-    torn higher-numbered manifest file) but BEFORE the pointer flip
-    leaves the table reading the old state; vacuum removes exactly the
-    unreferenced garbage, anchored at the live manifest."""
-    from k8e_fetch_spark.plans.snapshots import (
-        current_manifest,
-        merge_insert_ignore_incremental,
-        read_manifest_table,
-        vacuum_manifest,
-    )
-
+    """A writer that dies AFTER writing its delta (or leaves a torn,
+    unparseable higher-numbered manifest) but BEFORE a successful
+    commit leaves the table reading the old state; vacuum removes
+    exactly the unreferenced garbage."""
     t = str(tmp_path / "mt")
-    merge_insert_ignore_incremental(
+    merge_insert_ignore_occ(
         spark, t, spark.createDataFrame([(1, "x")], "k int, v string")
     )
     live = current_manifest(t)
-    # torn write: complete-looking delta + manifest, pointer NOT flipped
+    # torn write: complete-looking delta, torn manifest above live
     poison = spark.createDataFrame([(-9, "TORN")], "k int, v string")
-    poison.write.parquet(f"{t}/delta-000099")
-    Path(f"{t}/manifest-000099.json").write_text('{"dirs": ["delta-000099"]}')
+    poison.write.parquet(f"{t}/delta-000099-torn")
+    Path(f"{t}/manifest-000099.json").write_text('{"dirs": ["delta-0000')
     assert current_manifest(t) == live
     assert _sorted_rows(read_manifest_table(spark, t)) == [(1, "x")]
-    removed = vacuum_manifest(t)
-    assert "delta-000099" in removed and "manifest-000099.json" in removed
+    removed = vacuum_manifest(t, retain_seconds=0.0)
+    assert sorted(removed) == ["delta-000099-torn", "manifest-000099.json"]
     assert _sorted_rows(read_manifest_table(spark, t)) == [(1, "x")]
 
 
@@ -141,16 +135,9 @@ def test_manifest_checkpoint_compacts_and_preserves_content(spark, tmp_path):
     """checkpoint rewrites the live dirs into one base and the manifest
     references ONLY it; content identical; vacuum then reclaims every
     superseded delta."""
-    from k8e_fetch_spark.plans.snapshots import (
-        checkpoint,
-        merge_insert_ignore_incremental,
-        read_manifest_table,
-        vacuum_manifest,
-    )
-
     t = str(tmp_path / "mt")
     for i in range(4):
-        merge_insert_ignore_incremental(
+        merge_insert_ignore_occ(
             spark,
             t,
             spark.createDataFrame([(j, f"v{j}") for j in range(i * 3, i * 3 + 4)],
@@ -160,7 +147,7 @@ def test_manifest_checkpoint_compacts_and_preserves_content(spark, tmp_path):
     assert len(before) == 13  # overlapping batches merged set-wise
     checkpoint(spark, t, n_files=1)
     assert _sorted_rows(read_manifest_table(spark, t)) == before
-    removed = vacuum_manifest(t)
+    removed = vacuum_manifest(t, retain_seconds=0.0)
     assert sum(1 for r in removed if r.startswith("delta-")) == 4
     assert _sorted_rows(read_manifest_table(spark, t)) == before
     # exactly one live data dir remains
@@ -172,110 +159,35 @@ def test_manifest_vacuum_keep_window_time_travel(spark, tmp_path):
     """vacuum_manifest(keep=2) preserves the live manifest AND its
     predecessor — including every data dir the predecessor references
     (a kept old manifest must stay READABLE, not just present) — while
-    a torn higher-numbered manifest is still reclaimed (anchored at the
-    pointer, not lexical order)."""
+    a torn higher-numbered manifest is still reclaimed."""
     import json
-
-    from k8e_fetch_spark.plans.snapshots import (
-        current_manifest,
-        merge_insert_ignore_incremental,
-        read_manifest_table,
-        vacuum_manifest,
-    )
 
     t = str(tmp_path / "mt")
     for i in range(3):
-        merge_insert_ignore_incremental(
+        merge_insert_ignore_occ(
             spark, t, spark.createDataFrame([(i, f"v{i}")], "k int, v string")
         )
     live = current_manifest(t)
     # torn manifest ABOVE live
-    Path(f"{t}/manifest-000099.json").write_text('{"dirs": ["delta-000001"]}')
-    removed = vacuum_manifest(t, keep=2)
+    Path(f"{t}/manifest-000099.json").write_text('{"dirs": [')
+    removed = vacuum_manifest(t, keep=2, retain_seconds=0.0)
     assert "manifest-000099.json" in removed
     assert "manifest-000001.json" in removed  # outside the keep window
     assert current_manifest(t) == live
     # live still reads complete
-    got = sorted(tuple(r) for r in read_manifest_table(spark, t).collect())
+    got = _sorted_rows(read_manifest_table(spark, t))
     assert got == [(0, "v0"), (1, "v1"), (2, "v2")]
     # the kept predecessor (manifest-000002) is still fully readable:
     # every dir it references survived
     prev = json.loads(Path(f"{t}/manifest-000002.json").read_text())["dirs"]
     for d in prev:
         assert Path(f"{t}/{d}").is_dir(), d
-
-
-def test_snapshot_and_manifest_forms_agree(spark, tmp_path):
-    """Cross-validation of the two transactional merge machineries:
-    the same overlapping batch sequence through the full-rewrite
-    snapshot table and the incremental manifest table must yield
-    identical row sets — the manifest form is a COST change (O(delta)
-    writes), never a semantics change."""
-    from k8e_fetch_spark.plans.snapshots import (
-        merge_insert_ignore,
-        merge_insert_ignore_incremental,
-        read_manifest_table,
-        read_table,
-    )
-
-    batches = [
-        [(1, "a"), (2, "b"), (None, "n")],
-        [(2, "b"), (3, "c"), (None, "n")],  # overlap incl. the NULL row
-        [(3, "c"), (4, "d")],
+    assert _sorted_rows(read_manifest_table(spark, t, version=2)) == [
+        (0, "v0"), (1, "v1"),
     ]
-    snap_dir, man_dir = str(tmp_path / "snap"), str(tmp_path / "man")
-    for rows in batches:
-        df = spark.createDataFrame(rows, "k int, v string")
-        merge_insert_ignore(spark, snap_dir, df)
-        merge_insert_ignore_incremental(spark, man_dir, df)
-    key = lambda t: tuple((v is None, v) for v in t)  # noqa: E731 (None-safe sort)
-    a = sorted((tuple(r) for r in read_table(spark, snap_dir).collect()), key=key)
-    b = sorted(
-        (tuple(r) for r in read_manifest_table(spark, man_dir).collect()), key=key
-    )
-    assert a == b
-    # the null-safe contract held on both paths: the NULL row merged ONCE
-    assert sum(1 for r in b if r[0] is None) == 1
 
 
-def test_vacuum_manifest_dangling_pointer_keeps_latest_not_nothing(spark, tmp_path):
-    """ADVICE r12 low: a pointer naming a manifest that is MISSING on
-    disk must degrade like the no-pointer case — keep the lexically
-    latest `keep` manifests and their dirs (readable garbage) — not
-    delete every delta/base dir (total data loss)."""
-    from k8e_fetch_spark.plans.snapshots import (
-        _manifest_pointer,
-        merge_insert_ignore_incremental,
-        read_manifest_table,
-        vacuum_manifest,
-    )
-
-    t = str(tmp_path / "mt")
-    merge_insert_ignore_incremental(
-        spark, t, spark.createDataFrame([(1, "x")], "k int, v string")
-    )
-    m2 = merge_insert_ignore_incremental(
-        spark, t, spark.createDataFrame([(2, "y")], "k int, v string")
-    )
-    # corrupt the pointer: names a manifest that does not exist
-    _manifest_pointer(t).write_text("manifest-000999.json")
-    removed = vacuum_manifest(t, keep=2)
-    # both manifests and both deltas survive under keep=2
-    assert removed == []
-    # keep=1 keeps exactly the lexically-latest manifest + its dirs
-    removed = vacuum_manifest(t, keep=1)
-    assert m2 not in removed and "delta-000002" not in removed
-    # repair the pointer to the surviving manifest: table reads fully
-    _manifest_pointer(t).write_text(m2)
-    rows = sorted(tuple(r) for r in read_manifest_table(spark, t).collect())
-    assert rows == [(1, "x"), (2, "y")]
-
-
-# --- OCC manifest tables (r13): concurrent-writer commit protocol ---
-
-
-def _occ_rows(df):
-    return sorted(map(tuple, df.collect()))
+# --- concurrent writers: the CAS commit protocol ---
 
 
 def test_occ_merge_lifecycle_and_idempotency(spark, tmp_path):
@@ -290,7 +202,7 @@ def test_occ_merge_lifecycle_and_idempotency(spark, tmp_path):
     # no pointer file on OCC tables — the version chain is the log
     assert not (Path(t) / "_CURRENT_MANIFEST").exists()
     assert (Path(t) / "_OCC").exists()
-    assert _occ_rows(snap.read_manifest_table(spark, t)) == [
+    assert _sorted_rows(snap.read_manifest_table(spark, t)) == [
         (1, "a"), (2, "b"), (3, "c"),
     ]
     # contained batch publishes nothing, returns current
@@ -335,13 +247,13 @@ def test_occ_lost_race_recomputes_and_preserves_both_writers(
     assert m == "manifest-000003.json"
     # both writers' rows present exactly once; loser re-derived its
     # delta against the winner (3 already inserted -> only 4 is new)
-    assert _occ_rows(snap.read_manifest_table(spark, t)) == [
+    assert _sorted_rows(snap.read_manifest_table(spark, t)) == [
         (1, "a"), (2, "b"), (3, "c"), (4, "d"),
     ]
     final_dirs = snap._manifest_dirs(t, m)
     delta3 = [d for d in final_dirs if d.startswith("delta-000003")]
     assert len(delta3) == 1
-    assert _occ_rows(spark.read.parquet(str(t / delta3[0]))) == [(4, "d")]
+    assert _sorted_rows(spark.read.parquet(str(t / delta3[0]))) == [(4, "d")]
     # the loser's abandoned v2 delta attempt was cleaned on conflict:
     # only the competitor's delta-000002 dir remains on disk
     v2_dirs = [p.name for p in t.iterdir() if p.name.startswith("delta-000002")]
@@ -384,52 +296,55 @@ def test_occ_checkpoint_vacuum_and_pointer_table_isolation(spark, tmp_path):
             ),
         )
     expect = [(i, f"v{i}") for i in range(7)]
-    assert _occ_rows(snap.read_manifest_table(spark, t)) == expect
+    assert _sorted_rows(snap.read_manifest_table(spark, t)) == expect
     m4 = snap.checkpoint(spark, t, n_files=1)
     assert m4 == "manifest-000004.json"
     # exclusive access here, so opt out of the OCC retention window
     removed = snap.vacuum_manifest(t, retain_seconds=0.0)
     assert any(r.startswith("delta-") for r in removed)
-    assert _occ_rows(snap.read_manifest_table(spark, t)) == expect
+    assert _sorted_rows(snap.read_manifest_table(spark, t)) == expect
     dirs = snap._manifest_dirs(Path(t), m4)
     assert len(dirs) == 1 and dirs[0].startswith("base-000004")
 
-    # pointer table in a sibling dir: untouched semantics (pointer file,
-    # no _OCC marker, crash-orphan higher manifest stays invisible)
-    p = str(tmp_path / "ptr")
-    snap.merge_insert_ignore_incremental(
-        spark, p, spark.createDataFrame([(1, "x")], "k int, v string")
-    )
-    assert (Path(p) / "_CURRENT_MANIFEST").exists()
-    assert not (Path(p) / "_OCC").exists()
-    Path(p, "manifest-000099.json").write_text('{"dirs": []}')
-    assert snap.current_manifest(p) == "manifest-000001.json"
+    # no pointer file ever appears — the version chain stays the only
+    # source of truth — and a torn (unparseable) higher manifest is
+    # never resolved as current
+    assert not (Path(t) / "_CURRENT_MANIFEST").exists()
+    Path(t, "manifest-000099.json").write_text('{"dirs": ')
+    assert snap.current_manifest(t) == m4
+    assert _sorted_rows(snap.read_manifest_table(spark, t)) == expect
 
 
 def test_occ_and_pointer_protocols_refuse_to_mix(spark, tmp_path):
-    """Protocol misuse is an ERROR, not silent corruption: the legacy
-    pointer merge on an OCC table would bypass the CAS, and OCC
-    adoption on a pointer table would resurrect crash-orphan complete
-    manifests the pointer protocol considers garbage."""
+    """Protocol misuse is an ERROR, not silent corruption: OCC adoption
+    on a directory written by the legacy single-writer pointer protocol
+    (a ``_CURRENT_MANIFEST`` pointer file) would resurrect crash-orphan
+    complete manifests the pointer considered garbage, so the merge
+    refuses and leaves the directory untouched."""
     import pytest as _pytest
 
     from k8e_fetch_spark.plans import snapshots as snap
 
     b = spark.createDataFrame([(1, "a")], "k int, v string")
-    occ = str(tmp_path / "occ")
-    snap.merge_insert_ignore_occ(spark, occ, b)
-    with _pytest.raises(ValueError, match="OCC table"):
-        snap.merge_insert_ignore_incremental(spark, occ, b)
-    ptr = str(tmp_path / "ptr")
-    snap.merge_insert_ignore_incremental(spark, ptr, b)
+    ptr = tmp_path / "ptr"
+    ptr.mkdir()
+    (ptr / "manifest-000001.json").write_text('{"dirs": []}')
+    (ptr / "_CURRENT_MANIFEST").write_text("manifest-000001.json")
     with _pytest.raises(ValueError, match="pointer table"):
-        snap.merge_insert_ignore_occ(spark, ptr, b)
+        snap.merge_insert_ignore_occ(spark, str(ptr), b)
+    assert sorted(p.name for p in ptr.iterdir()) == [
+        "_CURRENT_MANIFEST", "manifest-000001.json",
+    ]
+    # a fresh directory adopts OCC: marker written, no pointer
+    occ = tmp_path / "occ"
+    snap.merge_insert_ignore_occ(spark, str(occ), b)
+    assert (occ / "_OCC").exists() and not (occ / "_CURRENT_MANIFEST").exists()
 
 
 def test_manifest_time_travel_reads_inside_keep_window(spark, tmp_path):
     """read_manifest_table(version=N): historical versions inside the
     vacuum keep-window read back exactly as they were; vacuumed
-    versions raise with the readable list. Works on both protocols."""
+    versions raise with the readable list."""
     import pytest as _pytest
 
     from k8e_fetch_spark.plans import snapshots as snap
@@ -444,10 +359,10 @@ def test_manifest_time_travel_reads_inside_keep_window(spark, tmp_path):
             ),
         )
     assert snap.manifest_versions(t) == [1, 2, 3]
-    assert _occ_rows(snap.read_manifest_table(spark, t, version=1)) == [
+    assert _sorted_rows(snap.read_manifest_table(spark, t, version=1)) == [
         (0, "v0"), (1, "v1"), (2, "v2"),
     ]
-    assert _occ_rows(snap.read_manifest_table(spark, t, version=2)) == [
+    assert _sorted_rows(snap.read_manifest_table(spark, t, version=2)) == [
         (i, f"v{i}") for i in range(5)
     ]
     snap.vacuum_manifest(t, keep=2, retain_seconds=0.0)  # keeps v2, v3
@@ -455,7 +370,7 @@ def test_manifest_time_travel_reads_inside_keep_window(spark, tmp_path):
     with _pytest.raises(FileNotFoundError, match=r"readable versions: \[2, 3\]"):
         snap.read_manifest_table(spark, t, version=1)
     # v2's dirs survive the keep window: still reads exactly as before
-    assert _occ_rows(snap.read_manifest_table(spark, t, version=2)) == [
+    assert _sorted_rows(snap.read_manifest_table(spark, t, version=2)) == [
         (i, f"v{i}") for i in range(5)
     ]
 
@@ -476,7 +391,7 @@ def test_occ_real_two_process_race(tmp_path):
     prog = textwrap.dedent(
         """
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[3])
         from k8e_fetch_spark.session import get_spark
         from k8e_fetch_spark.plans import snapshots as snap
         table, lo = sys.argv[1], int(sys.argv[2])
@@ -491,7 +406,7 @@ def test_occ_real_two_process_race(tmp_path):
     )
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", prog, t, str(lo)],
+            [sys.executable, "-c", prog, t, str(lo), str(Path(__file__).parents[1])],
             stdout=subprocess.DEVNULL,
             stderr=subprocess.DEVNULL,
         )
@@ -552,7 +467,7 @@ def test_occ_vacuum_retention_protects_inflight_delta(spark, tmp_path):
     snap._commit_manifest_cas(
         Path(t), "manifest-000003.json", json.dumps({"dirs": [*live_dirs, inflight]})
     )
-    assert _occ_rows(snap.read_manifest_table(spark, t)) == [
+    assert _sorted_rows(snap.read_manifest_table(spark, t)) == [
         (0, "v0"), (1, "v1"), (2, "v2"), (3, "v3"), (9, "v9"),
     ]
 
